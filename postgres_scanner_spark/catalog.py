@@ -133,11 +133,8 @@ class Catalog:
             # live-database stand-in: reads go through the postgres_scan
             # DataSource connector (partitioned scan + pushdown)
             db = AttachedDatabase(alias, source, "duckdb", read_only)
-            from .pg_datasource import PostgresScanDataSource
-            try:
-                self.spark.dataSource.register(PostgresScanDataSource)
-            except Exception:
-                pass  # already registered
+            from .pg_datasource import ensure_registered
+            ensure_registered(self.spark)
         else:
             if os.path.sep in source and "=" not in source \
                     and "://" not in source:

@@ -13,24 +13,35 @@ Python DataSource (Spark 4 DataSource API):
           .load())
 
 Parity with the reference's execution strategy:
-- partitions(): ctid page-range tasks from scan.plan_scan_tasks —
+- partitions(): page-range tasks from scan.plan_scan_tasks —
   each Spark partition reads a disjoint page range, exactly the
   reference's per-thread task decomposition (postgres_scanner.cpp:238).
 - pushFilters(): Catalyst comparison/null/IN filters are accepted and
   rendered into the remote WHERE via pushdown.py — the others are
   returned to Spark to evaluate (same contract as
   postgres_scan_pushdown).
-- read(): yields Arrow record batches (the COPY-binary analog: a
-  columnar wire format, zero row-at-a-time Python).
+- read(): streams one task's rows from the source.
 
-Backends:
-- `duckdb:///path/file.db` — a local DuckDB file standing in for the
-  Postgres server. Page ranges are emulated over rowid so task
-  decomposition is exercised for real.
-- libpq DSNs (`host=... dbname=...`) — a real PostgreSQL server over
-  psycopg when installed, else the vendored pure-Python wire client
-  (pgclient.py). Exercised end-to-end against a live server in
-  tests/test_live_pg.py.
+Backends: the reference sends every scan, COPY and catalog probe
+through one connection type (src/postgres_connection.cpp
+PostgresConnection). Here that seam is a private source object, and
+`_source()` — the only place this module looks at the DSN scheme —
+builds one per DSN:
+- `_DuckSource` for `duckdb:///path/file.db`, a local DuckDB file
+  standing in for the server: page ranges are emulated over rowid so
+  task decomposition is exercised for real, and tasks yield Arrow
+  batches.
+- `_PgSource` for libpq DSNs (`host=... dbname=...`), a real
+  PostgreSQL server over psycopg when installed, else the vendored
+  pure-Python wire client (pgclient.py): ctid page ranges, and tasks
+  yield the tuples BinaryCopyReader decodes from COPY binary.
+  Exercised end-to-end against a live server in tests/test_live_pg.py.
+A source opens connections (`exec` for a row list, `iter` to stream
+rows), describes a table or query as a Spark schema plus PG udts,
+renders the select list, table reference and per-task page
+predicate, yields a task's rows, and loads a writer's spools in one
+transaction. The batch reader, both stream readers and the writer
+call it and never check the scheme themselves.
 """
 
 from __future__ import annotations
@@ -40,13 +51,14 @@ from typing import Iterator
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource, DataSourceArrowWriter, DataSourceReader,
+    DataSourceStreamArrowWriter, DataSourceStreamReader,
     DataSourceWriter, EqualTo, Filter, GreaterThan, GreaterThanOrEqual,
     In, InputPartition, IsNotNull, IsNull, LessThan, LessThanOrEqual,
-    WriterCommitMessage,
+    SimpleDataSourceStreamReader, WriterCommitMessage,
 )
 
 from .pushdown import transform_filters
-from .scan import plan_scan_tasks
+from .scan import log_query, plan_scan_tasks
 from .settings import SETTINGS
 
 _ROWS_PER_PAGE = 128  # rowid-page emulation for the duckdb backend
@@ -255,17 +267,555 @@ def _spark_filter_to_tuple(f: Filter):
     return None
 
 
+def _pg_cast(dt: T.DataType) -> str:
+    """Server-side cast so every column arrives over COPY binary
+    in EXACTLY the wire format the Spark-type→OID decode expects
+    (a uuid/json/inet column probed as StringType must ship as
+    text, not its native 16-byte/uvarlena send format)."""
+    if isinstance(dt, T.ArrayType):
+        inner = dt
+        depth = 0
+        while isinstance(inner, T.ArrayType):
+            inner = inner.elementType
+            depth += 1
+        base = _pg_cast(inner)
+        return (base or "::text") + "[]" * depth
+    if isinstance(dt, T.StringType):
+        return "::text"
+    if isinstance(dt, T.DoubleType):
+        return "::float8"
+    if isinstance(dt, T.FloatType):
+        return "::float4"
+    if isinstance(dt, T.LongType):
+        return "::int8"
+    if isinstance(dt, T.IntegerType):
+        return "::int4"
+    if isinstance(dt, (T.ShortType, T.ByteType)):
+        return "::int2"
+    if isinstance(dt, T.BooleanType):
+        return "::bool"
+    if isinstance(dt, T.BinaryType):
+        return "::bytea"
+    if isinstance(dt, T.DateType):
+        return "::date"
+    if isinstance(dt, T.TimestampType):
+        return "::timestamptz"
+    if isinstance(dt, T.TimestampNTZType):
+        return "::timestamp"
+    if isinstance(dt, T.DecimalType):
+        return f"::numeric({dt.precision},{dt.scale})"
+    return ""
+
+
+def _pg_col_cast(f: T.StructField, udts: dict) -> str:
+    """Per-column server-side cast; geometry columns (known from
+    the probe's udt) ship their NATIVE send format — the decoder
+    has dedicated branches — instead of an invalid ::float8[]/
+    struct cast derived from the Spark type."""
+    from .types import GEOMETRY_OIDS
+    if udts.get(f.name) in GEOMETRY_OIDS:
+        return ""
+    return _pg_cast(f.dataType)
+
+
+def _duck_sql_type(dt: T.DataType) -> str:
+    if isinstance(dt, T.ArrayType):
+        return _duck_sql_type(dt.elementType) + "[]"
+    if isinstance(dt, T.DecimalType):
+        return f"DECIMAL({dt.precision},{dt.scale})"
+    return {
+        T.LongType(): "BIGINT", T.IntegerType(): "INTEGER",
+        T.ShortType(): "SMALLINT", T.ByteType(): "TINYINT",
+        T.DoubleType(): "DOUBLE", T.FloatType(): "FLOAT",
+        T.StringType(): "VARCHAR", T.BooleanType(): "BOOLEAN",
+        T.DateType(): "DATE", T.TimestampNTZType(): "TIMESTAMP",
+        T.TimestampType(): "TIMESTAMP WITH TIME ZONE",
+        T.BinaryType(): "BLOB",
+    }.get(dt, "VARCHAR")
+
+
+def _pg_sql_type(dt: T.DataType) -> str:
+    if isinstance(dt, T.ArrayType):
+        return _pg_sql_type(dt.elementType) + "[]"
+    if isinstance(dt, T.DecimalType):
+        return f"NUMERIC({dt.precision},{dt.scale})"
+    return {
+        T.LongType(): "BIGINT", T.IntegerType(): "INTEGER",
+        T.ShortType(): "SMALLINT", T.ByteType(): "SMALLINT",
+        T.DoubleType(): "DOUBLE PRECISION", T.FloatType(): "REAL",
+        T.StringType(): "TEXT", T.BooleanType(): "BOOLEAN",
+        T.DateType(): "DATE", T.TimestampNTZType(): "TIMESTAMP",
+        T.TimestampType(): "TIMESTAMPTZ",
+        T.BinaryType(): "BYTEA",
+    }.get(dt, "TEXT")
+
+
+# udts whose typmod is a sub-second datetime precision — the
+# overwrite definition-match probe compares it via
+# information_schema.datetime_precision (date is excluded: it
+# reports 0 there but carries no typmod)
+_DT_UDTS = frozenset(
+    {"timestamp", "timestamptz", "time", "timetz", "interval"})
+
+
+def _typmod(sql_type: str, udt: str
+            ) -> tuple[int | None, int | None, int | None, int | None]:
+    """DDL type modifiers → the (character_maximum_length,
+    numeric_precision, numeric_scale, datetime_precision) tuple
+    information_schema reports, for the overwrite
+    definition-match probe. Datetime/time/interval sub-second
+    precision and bit lengths are modeled too — a surviving
+    timestamp(0) column must NOT 'match' an unconstrained
+    incoming TIMESTAMP, or the TRUNCATE path would silently
+    round sub-second values on COPY (same silent-coercion class
+    the numeric check prevents). Defaults mirror PG: bare
+    datetime types report precision 6, bare bpchar/bit report
+    length 1, unconstrained varchar/varbit/numeric report NULL."""
+    import re
+    m = re.search(r"\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)",
+                  sql_type.strip().lower())
+    a = int(m.group(1)) if m else None
+    b = int(m.group(2)) if m and m.group(2) is not None else None
+    if udt == "numeric":
+        if a is None:
+            return (None, None, None, None)
+        # numeric(p) means scale 0 in PG
+        return (None, a, b if b is not None else 0, None)
+    if udt in ("varchar", "varbit"):
+        return (a, None, None, None)
+    if udt in ("bpchar", "bit"):
+        return (a if a is not None else 1, None, None, None)
+    if udt in _DT_UDTS:
+        return (None, None, None, a if a is not None else 6)
+    return (None, None, None, None)
+
+
+def _udt_name(sql_type: str) -> str:
+    """DDL type name → the udt_name information_schema reports for
+    it, for the overwrite definition-match probe. Arrays report
+    '_elem' (any dimensionality); enums/domains report their own
+    name, which the identity fallback covers."""
+    import re
+    base = sql_type.strip().lower()
+    dims = 0
+    while base.endswith("[]"):
+        base = base[:-2].strip()
+        dims += 1
+    base = re.sub(r"\(.*\)$", "", base).strip()
+    udt = {
+        "smallint": "int2", "integer": "int4", "int": "int4",
+        "bigint": "int8", "real": "float4",
+        "double precision": "float8", "boolean": "bool",
+        "timestamp": "timestamp",
+        "timestamp without time zone": "timestamp",
+        "timestamptz": "timestamptz",
+        "timestamp with time zone": "timestamptz",
+        "decimal": "numeric", "character varying": "varchar",
+        "char": "bpchar", "character": "bpchar",
+        "time": "time", "time without time zone": "time",
+        "time with time zone": "timetz",
+        "bit varying": "varbit",
+    }.get(base, base)
+    if udt.startswith("interval"):
+        udt = "interval"    # interval day to second → udt interval
+    return ("_" + udt) if dims else udt
+
+
+# ---------------------------------------------------------------------------
+# Sources: the one seam between the Spark-facing classes and a database
+# ---------------------------------------------------------------------------
+
+class _Conn:
+    """One open connection to a source: `exec(sql)` returns every
+    row, `iter(sql, arraysize)` streams them. As a context manager it
+    hands exit to the driver's own (libpq commits or rolls back, then
+    closes; duckdb closes)."""
+
+    def __init__(self, con):
+        self.con = con
+
+    def __enter__(self):
+        self.con.__enter__()
+        return self
+
+    def __exit__(self, *exc):
+        return self.con.__exit__(*exc)
+
+
+class _DuckConn(_Conn):
+    def exec(self, sql: str, params=None) -> list:
+        return self.con.execute(sql, params).fetchall()
+
+    def iter(self, sql: str, arraysize: int = 10_000):
+        # drains incrementally: a task never holds its slice as one list
+        cur = self.con.execute(sql)
+        while chunk := cur.fetchmany(arraysize):
+            yield from chunk
+
+
+class _PgConn(_Conn):
+    def exec(self, sql: str, params=None) -> list:
+        with self.con.cursor() as cur:
+            cur.execute(sql, params)
+            return cur.fetchall()
+
+    def iter(self, sql: str, arraysize: int = 10_000):
+        # a SERVER-SIDE (named) cursor: the server, not the client,
+        # holds the un-fetched tail
+        with self.con.cursor(name="pg_spark_slice") as cur:
+            cur.itersize = arraysize
+            cur.execute(sql)
+            yield from cur
+
+
+class _Source:
+    """What the connector needs from the database behind one DSN.
+    `dsn` is what connect() opens (a libpq DSN, or the duckdb file
+    path); `schema` qualifies table references when not None."""
+
+    def __init__(self, dsn: str, schema: str | None):
+        self.dsn, self.schema = dsn, schema
+
+    def table_ref(self, table: str) -> str:
+        if self.schema is None:
+            return f'"{table}"'
+        return f'"{self.schema}"."{table}"'
+
+    def page_wheres(self, tasks) -> list[str]:
+        """Per-task page predicate; a single task scans unfiltered."""
+        if len(tasks) == 1:
+            return [""]
+        return [self._page_where(t) for t in tasks]
+
+
+def _source(options) -> _Source:
+    """The source for a DSN — the module's only scheme check."""
+    dsn, schema = options.get("dsn", ""), options.get("schema")
+    if dsn.startswith("duckdb://"):
+        # duckdb's default schema is main, not public: a table stays
+        # unqualified unless the schema option names one (source_schema
+        # attaches, bug63.test)
+        return _DuckSource(dsn[len("duckdb://"):], schema)
+    return _PgSource(dsn, "public" if schema is None else schema)
+
+
+class _DuckSource(_Source):
+    """A local DuckDB file standing in for the Postgres server."""
+
+    def connect(self, read_only: bool = True) -> _DuckConn:
+        # read-only, so concurrent executor tasks can share the file
+        import duckdb
+        return _DuckConn(duckdb.connect(self.dsn, read_only=read_only))
+
+    def describe(self, table: str, query: str):
+        probe = query or f"SELECT * FROM {self.table_ref(table)}"
+        with self.connect() as c:
+            desc = c.exec(f"DESCRIBE {probe}")
+        return T.StructType([T.StructField(n, _duck_type(t), True)
+                             for n, t, *_ in desc]), {}
+
+    def pages(self, table: str) -> int:
+        return 0    # no heap to size: one task unless approx_pages says
+
+    def _page_where(self, t) -> str:
+        return (f"rowid >= {t.page_min * _ROWS_PER_PAGE} AND "
+                f"rowid < {t.page_max * _ROWS_PER_PAGE}")
+
+    def select_list(self, fields, udts) -> str:
+        return ", ".join(f'"{f.name}"' for f in fields)
+
+    def query_sql(self, query: str, cols: str) -> str:
+        return query
+
+    def read(self, sql: str, fields, udts) -> Iterator:
+        # the connection closes even when the query errors or Spark
+        # abandons the generator (limit/take) — an open read_only
+        # handle blocks later writers to the same file
+        with self.connect() as c:
+            for batch in c.con.execute(sql).fetch_record_batch(8192):
+                # arrow-normalize types Spark's ingest rejects — enum
+                # dictionaries (→ declared varchar, the reference's
+                # enum mapping: postgres_utils.cpp / bug71.test),
+                # month_day_nano intervals (→ duration, interval.test),
+                # unsigned ints (→ widened signed,
+                # attach_ubigint.test), time64 (→ text,
+                # attach_types_time.test) — recursively through lists
+                # and structs
+                yield _normalize_batch(batch)
+
+    def load(self, w: "PostgresScanWriter", messages) -> None:
+        """The decoded spools go in through a DataFrame registration."""
+        import io
+        import pandas as pd
+        from .copyio import _pg_binary_layout
+        from .pgwire import BinaryCopyReader
+        fields = w.schema_.fields
+        oids, _, _, array_cols = _pg_binary_layout(w.schema_)
+        spool = BinaryCopyReader(oids, array_cols)
+        target = self.table_ref(w.table)
+        # explicit column types + casted insert: pandas would register
+        # ns-precision timestamps / object columns that poison the
+        # table's declared types for every later reader
+        cols = ", ".join(f'"{f.name}" {_duck_sql_type(f.dataType)}'
+                         for f in fields)
+        names = ", ".join(f'"{f.name}"' for f in fields)
+        casts = ", ".join(
+            f'CAST("{f.name}" AS {_duck_sql_type(f.dataType)})'
+            for f in fields)
+        with self.connect(read_only=False) as c:
+            con = c.con
+            con.execute("BEGIN")
+            try:
+                # overwrite REPLACES the table definition — a stale
+                # table with different column order/types must not
+                # survive and receive positionally-mismapped rows
+                if w.overwrite:
+                    con.execute(f"DROP TABLE IF EXISTS {target}")
+                con.execute(f"CREATE TABLE IF NOT EXISTS {target} ({cols})")
+                # one spool at a time inside the SAME transaction: peak
+                # driver memory is one partition's rows, not the dataset
+                for m in messages:
+                    with open(m.path, "rb") as fh:
+                        rows = list(spool.read(io.BytesIO(fh.read())))
+                    pdf = pd.DataFrame(rows, columns=[f.name for f in fields])
+                    con.register("_pg_spark_load", pdf)
+                    # insert BY NAME so an existing table with a
+                    # different column order maps correctly in append
+                    con.execute(f"INSERT INTO {target} ({names}) "
+                                f"SELECT {casts} FROM _pg_spark_load")
+                    con.unregister("_pg_spark_load")
+                con.execute("COMMIT")
+            except Exception:
+                con.execute("ROLLBACK")
+                raise
+
+
+class _PgSource(_Source):
+    """A real PostgreSQL server over psycopg when installed, else the
+    vendored pure-Python wire client (pgclient.py)."""
+
+    def connect(self) -> _PgConn:
+        from .pgclient import pg_driver
+        return _PgConn(pg_driver().connect(self.dsn))
+
+    def describe(self, table: str, query: str):
+        from .types import pg_type_to_spark, spark_type_from_oid
+        with self.connect() as c, c.con.cursor() as cur:
+            if query:
+                # result-set probe: run the query LIMIT 0 server-side
+                # and read the cursor's result descriptor — the
+                # reference does exactly this for postgres_query
+                # (src/postgres_query.cpp PostgresQueryBind executes
+                # the user SQL and derives the bind schema from the
+                # result set, not the table catalog), so
+                # computed/expression columns type correctly
+                cur.execute(f"SELECT * FROM ("
+                            f"{query.rstrip().rstrip(';')}) "
+                            f"_pg_spark_probe LIMIT 0")
+                if not cur.description:
+                    raise ValueError(
+                        "postgres_scan query returned no result "
+                        "descriptor — not a SELECT?")
+                return T.StructType([
+                    T.StructField(
+                        col.name,
+                        spark_type_from_oid(col.type_code,
+                                            precision=col.precision,
+                                            scale=col.scale),
+                        True)
+                    for col in cur.description
+                ]), {}
+            # information_schema probe — the reference reads the same
+            # catalog via PGQuery (postgres_scanner.cpp GetColumnInfo)
+            # attndims gives the DECLARED dimensionality so the probe
+            # types int[][] as array<array<int>> — decode_array emits
+            # nested lists for ndim>1 frames and the declared schema
+            # must match (reference: postgres_utils.cpp
+            # TypeToLogicalType walks the same catalog dims;
+            # attach_existing_multidimensional_array.test)
+            cur.execute(
+                "SELECT c.column_name, c.data_type, c.udt_name, "
+                "c.numeric_precision, c.numeric_scale, "
+                "COALESCE(a.attndims, 1) "
+                "FROM information_schema.columns c "
+                "JOIN pg_catalog.pg_class pc ON pc.relname = c.table_name "
+                "JOIN pg_catalog.pg_namespace pn "
+                "  ON pn.oid = pc.relnamespace "
+                " AND pn.nspname = c.table_schema "
+                "JOIN pg_catalog.pg_attribute a "
+                "  ON a.attrelid = pc.oid "
+                " AND a.attname = c.column_name "
+                "WHERE c.table_schema = %s AND c.table_name = %s "
+                "ORDER BY c.ordinal_position", (self.schema, table))
+            cols = cur.fetchall()
+        fields, udts = [], {}
+        for name, dtyp, udt, prec, scale, ndims in cols:
+            if dtyp == "ARRAY":
+                dt = pg_type_to_spark(udt.lstrip("_"),
+                                      array_dims=max(ndims, 1))
+            else:
+                dt = pg_type_to_spark(
+                    udt or dtyp, precision=prec, scale=scale)
+            udts[name] = (udt or dtyp or "").lower()
+            fields.append(T.StructField(name, dt, True))
+        if not fields:
+            raise ValueError(
+                f"table {self.schema}.{table} not found on remote server")
+        return T.StructType(fields), udts
+
+    def pages(self, table: str) -> int:
+        """Exact heap page count via pg_relation_size — the reference
+        sizes its parallel scan from the same catalog number
+        (postgres_scanner.cpp PostgresBindData approx_num_pages from
+        the pg_class probe). One cheap driver-side catalog query; any
+        failure degrades to a single-task scan."""
+        try:
+            with self.connect() as c:
+                rows = c.exec(
+                    "SELECT (pg_relation_size(c.oid) / "
+                    "current_setting('block_size')::int)::int "
+                    "FROM pg_class c JOIN pg_namespace n "
+                    "ON n.oid = c.relnamespace "
+                    "WHERE n.nspname = %s AND c.relname = %s",
+                    (self.schema, table))
+            return int(rows[0][0]) if rows else 0
+        except Exception:
+            return 0
+
+    def _page_where(self, t) -> str:
+        return t.predicate
+
+    def select_list(self, fields, udts) -> str:
+        # every column cast to the wire format the decoder expects
+        return ", ".join(f'"{f.name}"{_pg_col_cast(f, udts)} AS "{f.name}"'
+                         for f in fields)
+
+    def query_sql(self, query: str, cols: str) -> str:
+        return f"SELECT {cols} FROM ({query}) AS q"
+
+    def read(self, sql: str, fields, udts) -> Iterator:
+        """Stream `COPY (sql) TO STDOUT (FORMAT binary)` and decode
+        the PGCOPY frames with pgwire — the same wire path as the
+        reference (postgres_connection.cpp BeginCopyTo +
+        postgres_binary_reader.hpp). Yields plain tuples; Spark
+        converts per the declared schema."""
+        from .pgwire import BinaryCopyReader, ChunkStream, spark_field_oid
+        from .types import GEOMETRY_OIDS
+        oids = [GEOMETRY_OIDS.get(udts.get(f.name),
+                                  spark_field_oid(f.dataType))
+                for f in fields]
+        array_cols = {
+            i for i, f in enumerate(fields)
+            if isinstance(f.dataType, T.ArrayType)
+            and udts.get(f.name) not in GEOMETRY_OIDS}
+        reader = BinaryCopyReader(oids, array_cols)
+        with self.connect() as c, c.con.cursor() as cur, \
+                cur.copy(f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
+            yield from reader.read(ChunkStream(cp))
+
+    def load(self, w: "PostgresScanWriter", messages) -> None:
+        """Each spool replays as `COPY target FROM STDIN (FORMAT
+        binary)` on one connection, committed once."""
+        target = self.table_ref(w.table)
+        # column_types option: JSON {column: pg_type} overriding the
+        # default Spark→PG DDL map, so a varchar-in-Spark column can
+        # CREATE as its server-side UDT (enum/domain) — closing the
+        # enum-writes-back-as-VARCHAR gap (reference: bug71.test reads
+        # a UDT column; the scan side already types it via _pg_udts)
+        import json
+        import re
+        overrides = json.loads(w.options.get("column_types", "{}"))
+        # a type name: word chars/spaces (TIMESTAMP WITH TIME ZONE),
+        # optional schema qualifier, optional (p[,s]) with NUMBERS
+        # only, optional [] suffixes — no quotes, no free commas, so
+        # a value cannot smuggle extra column definitions into the
+        # CREATE TABLE it is spliced into
+        type_re = (r"[A-Za-z_][\w ]*(?:\.[A-Za-z_][\w ]*)?"
+                   r"(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\))?(?:\[\])*")
+        for cname, ctype in overrides.items():
+            if not re.fullmatch(type_re, ctype.strip()):
+                raise ValueError(
+                    f"column_types[{cname!r}] = {ctype!r} is not a "
+                    f"plain type name")
+        ddl = [(f.name, overrides.get(f.name, _pg_sql_type(f.dataType)))
+               for f in w.schema_.fields]
+        cols = ", ".join(f'"{n}" {t}' for n, t in ddl)
+        with self.connect() as c, c.con.cursor() as cur:
+            # overwrite: TRUNCATE when the existing definition already
+            # matches the incoming one COLUMN-FOR-COLUMN (names, order,
+            # and wire type) — preserving the table's indexes,
+            # constraints, grants, defaults, and dependent views.
+            # Otherwise DROP + CREATE: binary COPY maps columns
+            # POSITIONALLY, so a surviving table with a different
+            # column order or types would load mis-mapped rows or fail
+            # mid-COPY. The DROP path is DESTRUCTIVE to dependent
+            # objects by design — redefine-on-overwrite is the only
+            # way to honor Spark's mode("overwrite") contract when the
+            # shapes diverge.
+            if w.overwrite:
+                # typmods matter too: numeric(10,2) surviving a
+                # TRUNCATE would silently round values an incoming
+                # numeric(12,6) write expects to keep, and a shorter
+                # varchar(n) would abort the COPY mid-write — so the
+                # match covers length/precision/scale, not just the
+                # base udt. Non-numeric udts normalize prec/scale to
+                # None (information_schema reports intrinsic widths
+                # like int4→32 that are not typmods).
+                cur.execute(
+                    "SELECT column_name, udt_name, "
+                    "character_maximum_length, numeric_precision, "
+                    "numeric_scale, datetime_precision "
+                    "FROM information_schema.columns "
+                    "WHERE table_schema = %s AND table_name = %s "
+                    "ORDER BY ordinal_position",
+                    (self.schema, w.table))
+                existing = [
+                    (n, u, cl,
+                     p if u == "numeric" else None,
+                     s if u == "numeric" else None,
+                     # date reports datetime_precision 0 yet has no
+                     # typmod — only the sub-second family compares
+                     dtp if u in _DT_UDTS else None)
+                    for n, u, cl, p, s, dtp in cur.fetchall()]
+                want = [(n, _udt_name(t), *_typmod(t, _udt_name(t)))
+                        for n, t in ddl]
+                if existing and existing == want:
+                    cur.execute(f"TRUNCATE TABLE {target}")
+                else:
+                    cur.execute(f"DROP TABLE IF EXISTS {target}")
+            cur.execute(f"CREATE TABLE IF NOT EXISTS {target} ({cols})")
+            for m in messages:
+                with cur.copy(f"COPY {target} FROM STDIN "
+                              "(FORMAT binary)") as cp:
+                    with open(m.path, "rb") as fh:
+                        while chunk := fh.read(1 << 20):
+                            cp.write(chunk)
+            c.con.commit()
+
+
+def _ProbeConn(dsn: str) -> _Conn:
+    """Open one connection to the source behind `dsn`; the stream
+    readers open theirs here. One connection serves a whole sequence
+    of statements — the keyset boundary walk issues
+    O(backlog/max_rows) probes on a fresh stream's initial backlog,
+    and a connect/auth/close per probe would make connection setup
+    dominate the walk."""
+    return _source({"dsn": dsn}).connect()
+
+
+# ---------------------------------------------------------------------------
+# Batch reader
+# ---------------------------------------------------------------------------
+
 class PostgresScanReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options):
         self.schema_ = schema
-        self.dsn = options.get("dsn", "")
+        self.src = _source(options)
         self.table = options.get("table", "")
         # ad-hoc passthrough (postgres_query): the remote engine runs
         # this SQL; a query result has no ctid/rowid, so it reads as a
         # single stream (same as the reference's postgres_query)
         self.query = options.get("query", "")
-        self.pg_schema = options.get("schema", "public")
-        self.schema_explicit = "schema" in options
         self.approx_pages = int(options.get("approx_pages", "0"))
         # settings are process-global on the driver; the reader plans in a
         # separate Python worker, so per-scan overrides travel as options
@@ -311,296 +861,94 @@ class PostgresScanReader(DataSourceReader):
 
     # -- task decomposition (reference: postgres_scanner.cpp PrepareBind)
     def partitions(self):
+        cols = self.src.select_list(self.schema_.fields, self.pg_udts)
         if self.query:
-            if self.dsn.startswith("duckdb://"):
-                return [_Task(self.query)]
-            # live PG: wrap so every output column is cast to the wire
-            # format the decoder expects (same as the table path)
-            cols = ", ".join(
-                f'"{f.name}"{self._col_cast(f)} AS "{f.name}"'
-                for f in self.schema_.fields)
-            return [_Task(f"SELECT {cols} FROM ({self.query}) AS q")]
-        if self.approx_pages <= 0 and \
-                not self.dsn.startswith("duckdb://"):
-            self.approx_pages = self._probe_pages()
+            return [_Task(self.src.query_sql(self.query, cols))]
+        if self.approx_pages <= 0:
+            self.approx_pages = self.src.pages(self.table)
         tasks = plan_scan_tasks(self.approx_pages,
                                 pages_per_task=self.pages_per_task,
                                 max_tasks=SETTINGS.pg_connection_limit)
-        if self.dsn.startswith("duckdb://"):
-            task_wheres = [""] if len(tasks) == 1 else [
-                f"rowid >= {t.page_min * _ROWS_PER_PAGE} AND "
-                f"rowid < {t.page_max * _ROWS_PER_PAGE}"
-                for t in tasks
-            ]
-        else:
-            task_wheres = [
-                t.predicate if len(tasks) > 1 else "" for t in tasks]
-        return [_Task(self._sql(w)) for w in task_wheres]
-
-    def _probe_pages(self) -> int:
-        """Live PG: exact heap page count via pg_relation_size — the
-        reference sizes its parallel scan from the same catalog
-        number (postgres_scanner.cpp PostgresBindData approx_num_pages
-        from the pg_class probe). One cheap driver-side catalog
-        query; any failure degrades to a single-task scan."""
-        from .pgclient import pg_driver
-        try:
-            with pg_driver().connect(self.dsn) as con, \
-                    con.cursor() as cur:
-                cur.execute(
-                    "SELECT (pg_relation_size(c.oid) / "
-                    "current_setting('block_size')::int)::int "
-                    "FROM pg_class c JOIN pg_namespace n "
-                    "ON n.oid = c.relnamespace "
-                    "WHERE n.nspname = %s AND c.relname = %s",
-                    (self.pg_schema, self.table))
-                row = cur.fetchone()
-                return int(row[0]) if row else 0
-        except Exception:
-            return 0
+        return [_Task(self._sql(cols, w))
+                for w in self.src.page_wheres(tasks)]
 
     def _col_cast(self, f: T.StructField) -> str:
-        """Per-column server-side cast; geometry columns (known from
-        the probe's udt) ship their NATIVE send format — the decoder
-        has dedicated branches — instead of an invalid ::float8[]/
-        struct cast derived from the Spark type."""
-        from .types import GEOMETRY_OIDS
-        if self.pg_udts.get(f.name) in GEOMETRY_OIDS:
-            return ""
-        return self._pg_cast(f.dataType)
+        return _pg_col_cast(f, self.pg_udts)
 
-    @staticmethod
-    def _pg_cast(dt: T.DataType) -> str:
-        """Server-side cast so every column arrives over COPY binary
-        in EXACTLY the wire format the Spark-type→OID decode expects
-        (a uuid/json/inet column probed as StringType must ship as
-        text, not its native 16-byte/uvarlena send format)."""
-        if isinstance(dt, T.ArrayType):
-            inner = dt
-            depth = 0
-            while isinstance(inner, T.ArrayType):
-                inner = inner.elementType
-                depth += 1
-            base = PostgresScanReader._pg_cast(inner)
-            return (base or "::text") + "[]" * depth
-        if isinstance(dt, T.StringType):
-            return "::text"
-        if isinstance(dt, T.DoubleType):
-            return "::float8"
-        if isinstance(dt, T.FloatType):
-            return "::float4"
-        if isinstance(dt, T.LongType):
-            return "::int8"
-        if isinstance(dt, T.IntegerType):
-            return "::int4"
-        if isinstance(dt, (T.ShortType, T.ByteType)):
-            return "::int2"
-        if isinstance(dt, T.BooleanType):
-            return "::bool"
-        if isinstance(dt, T.BinaryType):
-            return "::bytea"
-        if isinstance(dt, T.DateType):
-            return "::date"
-        if isinstance(dt, T.TimestampType):
-            return "::timestamptz"
-        if isinstance(dt, T.TimestampNTZType):
-            return "::timestamp"
-        if isinstance(dt, T.DecimalType):
-            return f"::numeric({dt.precision},{dt.scale})"
-        return ""
-
-    def _sql(self, task_where: str) -> str:
-        if self.dsn.startswith("duckdb://"):
-            cols = ", ".join(f'"{f.name}"' for f in self.schema_.fields)
-        else:
-            cols = ", ".join(
-                f'"{f.name}"{self._col_cast(f)} AS "{f.name}"'
-                for f in self.schema_.fields)
-        where = transform_filters(self.pushed)
-        preds = []
-        if task_where:
-            preds.append(task_where)
-        if where:
-            preds.append(where[len("WHERE "):])
-        if not self.dsn.startswith("duckdb://"):
-            sql = f'SELECT {cols} FROM "{self.pg_schema}"."{self.table}"'
-        elif self.schema_explicit:
-            # duckdb stand-in with an EXPLICIT schema (source_schema
-            # attaches, bug63.test); the default stays unqualified
-            # because duckdb's default schema is main, not public
-            sql = (f'SELECT {cols} FROM '
-                   f'"{self.pg_schema}"."{self.table}"')
-        else:
-            sql = f'SELECT {cols} FROM "{self.table}"'
+    def _sql(self, cols: str, task_where: str) -> str:
+        where = transform_filters(self.pushed)[len("WHERE "):]
+        preds = [p for p in (task_where, where) if p]
+        sql = f"SELECT {cols} FROM {self.src.table_ref(self.table)}"
         if preds:
             sql += " WHERE " + " AND ".join(preds)
-        if SETTINGS.pg_debug_show_queries:
-            print(sql)
+        log_query(sql)
         return sql
 
-    # -- execution: Arrow batches (the COPY-binary analog)
+    # -- execution: Arrow batches from duckdb, COPY-binary tuples from libpq
     def read(self, partition: _Task) -> Iterator:
-        sql = partition.sql
-        if self.dsn.startswith("duckdb://"):
-            import duckdb
-            import pyarrow as pa
-            path = self.dsn[len("duckdb://"):]
-            con = duckdb.connect(path, read_only=True)
-            try:
-                reader = con.execute(sql).fetch_record_batch(8192)
-                while True:
-                    try:
-                        batch = reader.read_next_batch()
-                    except StopIteration:
-                        break
-                    # arrow-normalize types Spark's ingest rejects —
-                    # enum dictionaries (→ declared varchar, the
-                    # reference's enum mapping: postgres_utils.cpp /
-                    # bug71.test), month_day_nano intervals
-                    # (→ duration, interval.test), unsigned ints
-                    # (→ widened signed, attach_ubigint.test), time64
-                    # (→ text, attach_types_time.test) — recursively
-                    # through lists and structs
-                    yield _normalize_batch(batch)
-            finally:
-                # close even when the query errors or Spark abandons
-                # the generator (limit/take) — an open read_only handle
-                # blocks later writers to the same file
-                con.close()
-            return
-        yield from self._read_live_pg(sql)
+        return self.src.read(partition.sql, self.schema_.fields,
+                             self.pg_udts)
 
-    def _read_live_pg(self, sql: str):
-        """Live Postgres: stream `COPY (sql) TO STDOUT (FORMAT binary)`
-        and decode the PGCOPY frames with pgwire — the same wire path
-        as the reference (postgres_connection.cpp BeginCopyTo +
-        postgres_binary_reader.hpp). Yields plain tuples; Spark
-        converts per the declared schema. Tested end-to-end against a
-        mocked psycopg feeding recorded PGCOPY chunks
-        (tests/test_datasource.py) plus fixture-level decoder tests
-        (tests/test_pgwire.py) — everything but the TCP socket."""
-        from .pgclient import pg_driver
-        psycopg = pg_driver()
-        from .pgwire import BinaryCopyReader, ChunkStream, spark_field_oid
-        from .types import GEOMETRY_OIDS
-        oids = [
-            GEOMETRY_OIDS.get(self.pg_udts.get(f.name),
-                              spark_field_oid(f.dataType))
-            for f in self.schema_.fields]
-        array_cols = {
-            i for i, f in enumerate(self.schema_.fields)
-            if isinstance(f.dataType, T.ArrayType)
-            and self.pg_udts.get(f.name) not in GEOMETRY_OIDS}
-        reader = BinaryCopyReader(oids, array_cols)
-        with psycopg.connect(self.dsn) as con, con.cursor() as cur:
-            with cur.copy(
-                    f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
-                yield from reader.read(ChunkStream(cp))
+    def _read_live_pg(self, sql: str) -> Iterator:
+        return self.read(_Task(sql))
 
 
-from pyspark.sql.datasource import (
-    DataSourceStreamReader, SimpleDataSourceStreamReader,
-)
+# ---------------------------------------------------------------------------
+# Stream readers
+# ---------------------------------------------------------------------------
+
+class _KeyRangeReader:
+    """What both stream readers share: a validated integer
+    `stream_key`, the source's table reference, max-key watermark
+    offsets, and the one key-range SELECT."""
+
+    def __init__(self, schema: T.StructType, options):
+        self.schema_ = schema
+        self.dsn = options.get("dsn", "")
+        self.table_ref = _source(options).table_ref(
+            options.get("table", ""))
+        # stream_key must name an integer column of the declared
+        # schema (offsets must JSON-serialize into the checkpoint and
+        # splice into SQL without quoting/injection concerns — a
+        # bigserial/identity column, the usual CDC key)
+        self.key = options.get("stream_key", "")
+        if not self.key:
+            raise ValueError(
+                "streaming postgres_scan needs .option('stream_key', "
+                "'<monotonic column>')")
+        kf = {f.name: f for f in schema.fields}.get(self.key)
+        if kf is None or not isinstance(
+                kf.dataType, (T.LongType, T.IntegerType, T.ShortType)):
+            raise ValueError(
+                f"stream_key {self.key!r} must be an integer column "
+                f"of the declared schema (got "
+                f"{kf.dataType.simpleString() if kf else 'missing'})")
+        self.cols = ", ".join(f'"{f.name}"' for f in schema.fields)
+
+    def initialOffset(self) -> dict:
+        return {"last_key": None}
+
+    def commit(self, end: dict) -> None:
+        pass  # offsets live in the stream checkpoint
+
+    def _range_sql(self, lo, hi, cols: str = "", limit: int = 0,
+                   offset: int | None = None) -> str:
+        """`key > lo AND key <= hi ORDER BY key` — a key-range scan
+        an indexed source serves without a full table pass."""
+        where = []
+        if lo is not None:
+            where.append(f'"{self.key}" > {int(lo)}')
+        if hi is not None:
+            where.append(f'"{self.key}" <= {int(hi)}')
+        return (f"SELECT {cols or self.cols} FROM {self.table_ref}"
+                + (" WHERE " + " AND ".join(where) if where else "")
+                + f' ORDER BY "{self.key}"'
+                + (f" OFFSET {int(offset)}" if offset is not None else "")
+                + (f" LIMIT {int(limit)}" if limit else ""))
 
 
-def _stream_exec(dsn: str, sql: str):
-    """Run one streaming key-range SQL against the source and return
-    all rows. Shared by the driver-side Simple reader and the
-    executor-side partitioned reader (where it runs inside the task
-    that owns the key slice). duckdb:// opens read-only so concurrent
-    executor tasks can share the file; libpq DSNs open one short
-    connection per call — the per-task connection model the
-    reference's scan also uses (postgres_scanner.cpp: one connection
-    per parallel scan task)."""
-    with _ProbeConn(dsn) as pc:
-        return pc.exec(sql)
-
-
-class _ProbeConn:
-    """ONE connection reused across a sequence of scalar probes — the
-    keyset boundary walk issues O(backlog/max_rows) probes on a fresh
-    stream's initial backlog, and a connect/auth/close per probe
-    (what _stream_exec does) would make connection setup dominate the
-    walk. Steady state is still one probe; this only changes the
-    cold-start cost from O(slices) handshakes to one."""
-
-    def __init__(self, dsn: str):
-        if dsn.startswith("duckdb://"):
-            import duckdb
-            self._con = duckdb.connect(dsn[len("duckdb://"):],
-                                       read_only=True)
-            self._duck = True
-        else:
-            from .pgclient import pg_driver
-            self._con = pg_driver().connect(dsn)
-            self._duck = False
-
-    def exec(self, sql: str):
-        if self._duck:
-            return self._con.execute(sql).fetchall()
-        with self._con.cursor() as cur:
-            cur.execute(sql)
-            return cur.fetchall()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        try:
-            self._con.close()
-        except Exception:
-            pass
-        return False
-
-
-def _stream_exec_iter(dsn: str, sql: str, arraysize: int = 10_000):
-    """Streaming variant of _stream_exec for row-bearing scans: yields
-    rows in fetchmany chunks so a task never builds its whole slice
-    as one Python list. duckdb:// drains incrementally from the
-    relation; live PG uses a SERVER-SIDE (named) cursor so the
-    server, not the client, holds the un-fetched tail. Scalar probes
-    keep using _stream_exec (1-row results)."""
-    if dsn.startswith("duckdb://"):
-        import duckdb
-        con = duckdb.connect(dsn[len("duckdb://"):], read_only=True)
-        try:
-            cur = con.execute(sql)
-            while chunk := cur.fetchmany(arraysize):
-                yield from chunk
-        finally:
-            con.close()
-        return
-    from .pgclient import pg_driver
-    psycopg = pg_driver()
-    with psycopg.connect(dsn) as con:
-        with con.cursor(name="pg_spark_slice") as cur:
-            cur.itersize = arraysize
-            cur.execute(sql)
-            yield from cur
-
-
-def _validate_stream_key(schema: T.StructType, options):
-    """Common option validation for both stream readers: stream_key
-    must name an integer column of the declared schema (offsets must
-    JSON-serialize into the checkpoint and splice into SQL without
-    quoting/injection concerns — a bigserial/identity column, the
-    usual CDC key)."""
-    key = options.get("stream_key", "")
-    if not key:
-        raise ValueError(
-            "streaming postgres_scan needs .option('stream_key', "
-            "'<monotonic column>')")
-    kf = {f.name: f for f in schema.fields}.get(key)
-    if kf is None or not isinstance(
-            kf.dataType, (T.LongType, T.IntegerType, T.ShortType)):
-        raise ValueError(
-            f"stream_key {key!r} must be an integer column "
-            f"of the declared schema (got "
-            f"{kf.dataType.simpleString() if kf else 'missing'})")
-    return key
-
-
-class PostgresScanStreamReader(SimpleDataSourceStreamReader):
+class PostgresScanStreamReader(_KeyRangeReader,
+                               SimpleDataSourceStreamReader):
     """STREAMING read path — `spark.readStream.format("postgres_scan")`
     — the CDC-style polling source the reference cannot express (its
     scan surface is batch-only): each micro-batch reads only the rows
@@ -616,10 +964,7 @@ class PostgresScanStreamReader(SimpleDataSourceStreamReader):
     clustered/indexed source serves without a full table pass."""
 
     def __init__(self, schema: T.StructType, options):
-        self.schema_ = schema
-        self.dsn = options.get("dsn", "")
-        self.table = options.get("table", "")
-        self.key = _validate_stream_key(schema, options)
+        super().__init__(schema, options)
         # bound each SOURCE FETCH during catch-up: read() drains the
         # backlog present at poll time (so Trigger.AvailableNow
         # honors its process-everything-available contract in one
@@ -639,23 +984,11 @@ class PostgresScanStreamReader(SimpleDataSourceStreamReader):
         self.max_batch = int(options.get("max_rows_per_batch", "0"))
         if self.max_batch and not self.max_rows:
             self.max_rows = self.max_batch
-        self.cols = ", ".join(f'"{f.name}"' for f in schema.fields)
         self.key_idx = [f.name for f in schema.fields].index(self.key)
 
-    def initialOffset(self) -> dict:
-        return {"last_key": None}
-
     def _scan(self, lo, hi=None, limit=0):
-        where = []
-        if lo is not None:
-            where.append(f'"{self.key}" > {int(lo)}')
-        if hi is not None:
-            where.append(f'"{self.key}" <= {int(hi)}')
-        sql = (f'SELECT {self.cols} FROM "{self.table}"'
-               + (" WHERE " + " AND ".join(where) if where else "")
-               + f' ORDER BY "{self.key}"'
-               + (f" LIMIT {int(limit)}" if limit else ""))
-        return _stream_exec(self.dsn, sql)
+        with _ProbeConn(self.dsn) as c:
+            return c.exec(self._range_sql(lo, hi, limit=limit))
 
     def _scan_capped_whole_keys(self, lo):
         """One capped fetch that never SPLITS a key group: offsets are
@@ -705,9 +1038,6 @@ class PostgresScanStreamReader(SimpleDataSourceStreamReader):
         return iter(self._scan(start.get("last_key"),
                                end.get("last_key")))
 
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the stream checkpoint
-
 
 class _KeySlice(InputPartition):
     """One (lo, hi] stream-key range — the unit of executor-side
@@ -720,7 +1050,8 @@ class _KeySlice(InputPartition):
         self.lo, self.hi = lo, hi
 
 
-class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
+class PostgresScanPartitionedStreamReader(_KeyRangeReader,
+                                          DataSourceStreamReader):
     """Default STREAMING read path — the partition-based evolution of
     the Simple reader above, mirroring the reference's
     split-per-task scan design (reference: src/postgres_scanner.cpp:
@@ -758,10 +1089,7 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, schema: T.StructType, options):
-        self.schema_ = schema
-        self.dsn = options.get("dsn", "")
-        self.table = options.get("table", "")
-        self.key = _validate_stream_key(schema, options)
+        super().__init__(schema, options)
         # slice size: max_rows_per_poll if given, else the Simple
         # reader's max_rows_per_batch (same memory-cap intent), else
         # a bounded default — the INITIAL BACKLOG of a new stream on
@@ -769,24 +1097,10 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
         self.max_rows = (int(options.get("max_rows_per_poll", "0"))
                          or int(options.get("max_rows_per_batch", "0"))
                          or 1_000_000)
-        self.cols = ", ".join(f'"{f.name}"' for f in schema.fields)
-
-    def initialOffset(self) -> dict:
-        return {"last_key": None}
-
-    def _range_sql(self, lo, hi):
-        where = []
-        if lo is not None:
-            where.append(f'"{self.key}" > {int(lo)}')
-        if hi is not None:
-            where.append(f'"{self.key}" <= {int(hi)}')
-        return (f'SELECT {self.cols} FROM "{self.table}"'
-                + (" WHERE " + " AND ".join(where) if where else "")
-                + f' ORDER BY "{self.key}"')
 
     def latestOffset(self) -> dict:
-        rows = _stream_exec(
-            self.dsn, f'SELECT max("{self.key}") FROM "{self.table}"')
+        with _ProbeConn(self.dsn) as c:
+            rows = c.exec(f'SELECT max("{self.key}") FROM {self.table_ref}')
         mx = rows[0][0] if rows else None
         return {"last_key": None if mx is None else int(mx)}
 
@@ -804,13 +1118,9 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
         slices, prev = [], lo
         with _ProbeConn(self.dsn) as pc:   # one conn for the whole walk
             while True:
-                cond = f'"{self.key}" <= {hi}'
-                if prev is not None:
-                    cond += f' AND "{self.key}" > {int(prev)}'
-                rows = pc.exec(
-                    f'SELECT "{self.key}" FROM "{self.table}" '
-                    f'WHERE {cond} ORDER BY "{self.key}" '
-                    f'OFFSET {self.max_rows - 1} LIMIT 1')
+                rows = pc.exec(self._range_sql(
+                    prev, hi, cols=f'"{self.key}"', limit=1,
+                    offset=self.max_rows - 1))
                 b = int(rows[0][0]) if rows and rows[0][0] is not None \
                     else None
                 if b is None or b >= hi:
@@ -823,20 +1133,13 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
         # executor-side: this is the only place rows move — streamed
         # in fetchmany chunks (server-side cursor on live PG), never
         # materialized as one list in the task
-        return _stream_exec_iter(
-            self.dsn, self._range_sql(partition.lo, partition.hi))
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the stream checkpoint
+        with _ProbeConn(self.dsn) as c:
+            yield from c.iter(self._range_sql(partition.lo, partition.hi))
 
 
-# udts whose typmod is a sub-second datetime precision — the
-# overwrite definition-match probe compares it via
-# information_schema.datetime_precision (date is excluded: it
-# reports 0 there but carries no typmod)
-_DT_UDTS = frozenset(
-    {"timestamp", "timestamptz", "time", "timetz", "interval"})
-
+# ---------------------------------------------------------------------------
+# Writers
+# ---------------------------------------------------------------------------
 
 class _SpoolMsg(WriterCommitMessage):
     """Commit message: one partition's PGCOPY spool file."""
@@ -855,17 +1158,13 @@ class PostgresScanWriter(DataSourceArrowWriter):
     Two-phase for Spark's exactly-once contract: each partition
     ENCODES its rows as a real PGCOPY binary stream into a spool file
     (executor-side, parallel — the expensive half), and commit()
-    loads every spool inside ONE transaction on ONE connection
-    (driver-side), so a failed job publishes nothing. Spools live on
-    the driver-shared filesystem here (local mode); on a cluster the
-    spool dir would be an object store — or, where per-partition
-    atomicity is acceptable, partitions would stream their COPY
-    directly, which is the reference's own (single-connection)
-    behavior.
-
-    Backends match the reader: `duckdb://` loads the decoded batches
-    through an Arrow registration; libpq DSNs replay each spool as a
-    `COPY "t" FROM STDIN (FORMAT binary)` via psycopg.
+    has the source load every spool inside ONE transaction on ONE
+    connection (driver-side), so a failed job publishes nothing.
+    Spools live on the driver-shared filesystem here (local mode); on
+    a cluster the spool dir would be an object store — or, where
+    per-partition atomicity is acceptable, partitions would stream
+    their COPY directly, which is the reference's own
+    (single-connection) behavior.
     """
 
     def __init__(self, schema: T.StructType, options, overwrite: bool):
@@ -873,7 +1172,7 @@ class PostgresScanWriter(DataSourceArrowWriter):
         self.schema_ = schema
         self.options = dict(options)
         self.overwrite = overwrite
-        self.dsn = self.options.get("dsn", "")
+        self.src = _source(self.options)
         self.table = self.options.get("table", "")
         if not self.table:
             raise ValueError("postgres_scan write needs .option('table')")
@@ -920,256 +1219,19 @@ class PostgresScanWriter(DataSourceArrowWriter):
         return _SpoolMsg(path, n)
 
     # -- driver-side transaction
-    def _decode_spool(self, message):
-        import io
-        from .copyio import _pg_binary_layout
-        from .pgwire import BinaryCopyReader
-        oids, _, _, array_cols = _pg_binary_layout(self.schema_)
-        reader = BinaryCopyReader(oids, array_cols)
-        with open(message.path, "rb") as fh:
-            yield from reader.read(io.BytesIO(fh.read()))
-
     def commit(self, messages) -> None:
         import shutil
-        messages = [m for m in messages if m is not None]
         try:
-            if self.dsn.startswith("duckdb://"):
-                self._commit_duckdb(messages)
-            else:
-                self._commit_live_pg(messages)
+            self.src.load(self, [m for m in messages if m is not None])
         finally:
             shutil.rmtree(self.spool, ignore_errors=True)
 
-    @staticmethod
-    def _duck_sql_type(dt: T.DataType) -> str:
-        if isinstance(dt, T.ArrayType):
-            return PostgresScanWriter._duck_sql_type(dt.elementType) + "[]"
-        if isinstance(dt, T.DecimalType):
-            return f"DECIMAL({dt.precision},{dt.scale})"
-        return {
-            T.LongType(): "BIGINT", T.IntegerType(): "INTEGER",
-            T.ShortType(): "SMALLINT", T.ByteType(): "TINYINT",
-            T.DoubleType(): "DOUBLE", T.FloatType(): "FLOAT",
-            T.StringType(): "VARCHAR", T.BooleanType(): "BOOLEAN",
-            T.DateType(): "DATE", T.TimestampNTZType(): "TIMESTAMP",
-            T.TimestampType(): "TIMESTAMP WITH TIME ZONE",
-            T.BinaryType(): "BLOB",
-        }.get(dt, "VARCHAR")
-
-    def _commit_duckdb(self, messages) -> None:
-        import duckdb
-        import pandas as pd
-        fields = self.schema_.fields
-        # explicit column types + casted insert: pandas would register
-        # ns-precision timestamps / object columns that poison the
-        # table's declared types for every later reader
-        cols = ", ".join(
-            f'"{f.name}" {self._duck_sql_type(f.dataType)}'
-            for f in fields)
-        names = ", ".join(f'"{f.name}"' for f in fields)
-        casts = ", ".join(
-            f'CAST("{f.name}" AS {self._duck_sql_type(f.dataType)})'
-            for f in fields)
-        con = duckdb.connect(self.dsn[len("duckdb://"):])
-        try:
-            con.execute("BEGIN")
-            # overwrite REPLACES the table definition — a stale table
-            # with different column order/types must not survive and
-            # receive positionally-mismapped rows
-            if self.overwrite:
-                con.execute(f'DROP TABLE IF EXISTS "{self.table}"')
-            con.execute(
-                f'CREATE TABLE IF NOT EXISTS "{self.table}" ({cols})')
-            # one spool at a time inside the SAME transaction: peak
-            # driver memory is one partition's rows, not the dataset
-            for m in messages:
-                pdf = pd.DataFrame(list(self._decode_spool(m)),
-                                   columns=[f.name for f in fields])
-                con.register("_pg_spark_load", pdf)
-                # insert BY NAME so an existing table with a different
-                # column order maps correctly in append mode
-                con.execute(f'INSERT INTO "{self.table}" ({names}) '
-                            f"SELECT {casts} FROM _pg_spark_load")
-                con.unregister("_pg_spark_load")
-            con.execute("COMMIT")
-        except Exception:
-            con.execute("ROLLBACK")
-            raise
-        finally:
-            con.close()
-
-    @staticmethod
-    def _pg_sql_type(dt: T.DataType) -> str:
-        if isinstance(dt, T.ArrayType):
-            return PostgresScanWriter._pg_sql_type(dt.elementType) + "[]"
-        if isinstance(dt, T.DecimalType):
-            return f"NUMERIC({dt.precision},{dt.scale})"
-        return {
-            T.LongType(): "BIGINT", T.IntegerType(): "INTEGER",
-            T.ShortType(): "SMALLINT", T.ByteType(): "SMALLINT",
-            T.DoubleType(): "DOUBLE PRECISION", T.FloatType(): "REAL",
-            T.StringType(): "TEXT", T.BooleanType(): "BOOLEAN",
-            T.DateType(): "DATE", T.TimestampNTZType(): "TIMESTAMP",
-            T.TimestampType(): "TIMESTAMPTZ",
-            T.BinaryType(): "BYTEA",
-        }.get(dt, "TEXT")
-
-    @staticmethod
-    def _typmod(sql_type: str, udt: str
-                ) -> tuple[int | None, int | None, int | None,
-                           int | None]:
-        """DDL type modifiers → the (character_maximum_length,
-        numeric_precision, numeric_scale, datetime_precision) tuple
-        information_schema reports, for the overwrite
-        definition-match probe. Datetime/time/interval sub-second
-        precision and bit lengths are modeled too — a surviving
-        timestamp(0) column must NOT 'match' an unconstrained
-        incoming TIMESTAMP, or the TRUNCATE path would silently
-        round sub-second values on COPY (same silent-coercion class
-        the numeric check prevents). Defaults mirror PG: bare
-        datetime types report precision 6, bare bpchar/bit report
-        length 1, unconstrained varchar/varbit/numeric report NULL."""
-        import re
-        m = re.search(r"\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)",
-                      sql_type.strip().lower())
-        a = int(m.group(1)) if m else None
-        b = int(m.group(2)) if m and m.group(2) is not None else None
-        if udt == "numeric":
-            if a is None:
-                return (None, None, None, None)
-            # numeric(p) means scale 0 in PG
-            return (None, a, b if b is not None else 0, None)
-        if udt in ("varchar", "varbit"):
-            return (a, None, None, None)
-        if udt in ("bpchar", "bit"):
-            return (a if a is not None else 1, None, None, None)
-        if udt in _DT_UDTS:
-            return (None, None, None, a if a is not None else 6)
-        return (None, None, None, None)
-
-    @staticmethod
-    def _udt_name(sql_type: str) -> str:
-        """DDL type name → the udt_name information_schema reports for
-        it, for the overwrite definition-match probe. Arrays report
-        '_elem' (any dimensionality); enums/domains report their own
-        name, which the identity fallback covers."""
-        import re
-        base = sql_type.strip().lower()
-        dims = 0
-        while base.endswith("[]"):
-            base = base[:-2].strip()
-            dims += 1
-        base = re.sub(r"\(.*\)$", "", base).strip()
-        udt = {
-            "smallint": "int2", "integer": "int4", "int": "int4",
-            "bigint": "int8", "real": "float4",
-            "double precision": "float8", "boolean": "bool",
-            "timestamp": "timestamp",
-            "timestamp without time zone": "timestamp",
-            "timestamptz": "timestamptz",
-            "timestamp with time zone": "timestamptz",
-            "decimal": "numeric", "character varying": "varchar",
-            "char": "bpchar", "character": "bpchar",
-            "time": "time", "time without time zone": "time",
-            "time with time zone": "timetz",
-            "bit varying": "varbit",
-        }.get(base, base)
-        if udt.startswith("interval"):
-            udt = "interval"    # interval day to second → udt interval
-        return ("_" + udt) if dims else udt
-
     def _commit_live_pg(self, messages) -> None:
-        from .pgclient import pg_driver
-        psycopg = pg_driver()
-        pg_schema = self.options.get("schema", "public")
-        target = f'"{pg_schema}"."{self.table}"'
-        # column_types option: JSON {column: pg_type} overriding the
-        # default Spark→PG DDL map, so a varchar-in-Spark column can
-        # CREATE as its server-side UDT (enum/domain) — closing the
-        # enum-writes-back-as-VARCHAR gap (reference: bug71.test reads
-        # a UDT column; the scan side already types it via _pg_udts)
-        import json
-        import re
-        overrides = json.loads(self.options.get("column_types", "{}"))
-        # a type name: word chars/spaces (TIMESTAMP WITH TIME ZONE),
-        # optional schema qualifier, optional (p[,s]) with NUMBERS
-        # only, optional [] suffixes — no quotes, no free commas, so
-        # a value cannot smuggle extra column definitions into the
-        # CREATE TABLE it is spliced into
-        type_re = (r"[A-Za-z_][\w ]*(?:\.[A-Za-z_][\w ]*)?"
-                   r"(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\))?(?:\[\])*")
-        for cname, ctype in overrides.items():
-            if not re.fullmatch(type_re, ctype.strip()):
-                raise ValueError(
-                    f"column_types[{cname!r}] = {ctype!r} is not a "
-                    f"plain type name")
-        cols = ", ".join(
-            f'"{f.name}" '
-            f'{overrides.get(f.name, self._pg_sql_type(f.dataType))}'
-            for f in self.schema_.fields)
-        with psycopg.connect(self.dsn) as con, con.cursor() as cur:
-            # overwrite: TRUNCATE when the existing definition already
-            # matches the incoming one COLUMN-FOR-COLUMN (names, order,
-            # and wire type) — preserving the table's indexes,
-            # constraints, grants, defaults, and dependent views.
-            # Otherwise DROP + CREATE: binary COPY maps columns
-            # POSITIONALLY, so a surviving table with a different
-            # column order or types would load mis-mapped rows or fail
-            # mid-COPY. The DROP path is DESTRUCTIVE to dependent
-            # objects by design — redefine-on-overwrite is the only
-            # way to honor Spark's mode("overwrite") contract when the
-            # shapes diverge.
-            if self.overwrite:
-                # typmods matter too: numeric(10,2) surviving a
-                # TRUNCATE would silently round values an incoming
-                # numeric(12,6) write expects to keep, and a shorter
-                # varchar(n) would abort the COPY mid-write — so the
-                # match covers length/precision/scale, not just the
-                # base udt. Non-numeric udts normalize prec/scale to
-                # None (information_schema reports intrinsic widths
-                # like int4→32 that are not typmods).
-                cur.execute(
-                    "SELECT column_name, udt_name, "
-                    "character_maximum_length, numeric_precision, "
-                    "numeric_scale, datetime_precision "
-                    "FROM information_schema.columns "
-                    "WHERE table_schema = %s AND table_name = %s "
-                    "ORDER BY ordinal_position",
-                    (pg_schema, self.table))
-                existing = [
-                    (n, u, cl,
-                     p if u == "numeric" else None,
-                     s if u == "numeric" else None,
-                     # date reports datetime_precision 0 yet has no
-                     # typmod — only the sub-second family compares
-                     dtp if u in _DT_UDTS else None)
-                    for n, u, cl, p, s, dtp in cur.fetchall()]
-                want = []
-                for f in self.schema_.fields:
-                    ddl = overrides.get(f.name,
-                                        self._pg_sql_type(f.dataType))
-                    u = self._udt_name(ddl)
-                    cl, p, s, dtp = self._typmod(ddl, u)
-                    want.append((f.name, u, cl, p, s, dtp))
-                if existing and existing == want:
-                    cur.execute(f"TRUNCATE TABLE {target}")
-                else:
-                    cur.execute(f"DROP TABLE IF EXISTS {target}")
-            cur.execute(f"CREATE TABLE IF NOT EXISTS {target} ({cols})")
-            for m in messages:
-                with cur.copy(f"COPY {target} FROM STDIN "
-                              "(FORMAT binary)") as cp:
-                    with open(m.path, "rb") as fh:
-                        while chunk := fh.read(1 << 20):
-                            cp.write(chunk)
-            con.commit()
+        self.src.load(self, messages)
 
     def abort(self, messages) -> None:
         import shutil
         shutil.rmtree(self.spool, ignore_errors=True)
-
-
-from pyspark.sql.datasource import DataSourceStreamArrowWriter
 
 
 class PostgresScanStreamWriter(DataSourceStreamArrowWriter):
@@ -1230,95 +1292,9 @@ class PostgresScanDataSource(DataSource):
     _pg_udts: dict  # probed col → PG udt name (live-PG attach only)
 
     def schema(self):
-        self._pg_udts = {}
-        dsn = self.options.get("dsn", "")
-        table = self.options.get("table", "")
-        query = self.options.get("query", "")
-        if dsn.startswith("duckdb://"):
-            import duckdb
-            con = duckdb.connect(dsn[len("duckdb://"):], read_only=True)
-            try:
-                if query:
-                    probe = query
-                elif "schema" in self.options:
-                    probe = (f'SELECT * FROM '
-                             f'"{self.options["schema"]}"."{table}"')
-                else:
-                    probe = f'SELECT * FROM "{table}"'
-                desc = con.execute(f'DESCRIBE {probe}').fetchall()
-            finally:
-                con.close()
-            return T.StructType([
-                T.StructField(n, _duck_type(t), True)
-                for n, t, *_ in desc
-            ])
-        from .pgclient import pg_driver
-        psycopg = pg_driver()
-        from .types import pg_type_to_spark
-        if query:
-            # result-set probe: run the query LIMIT 0 server-side and
-            # read the cursor's result descriptor — the reference does
-            # exactly this for postgres_query (src/postgres_query.cpp
-            # PostgresQueryBind executes the user SQL and derives the
-            # bind schema from the result set, not the table catalog),
-            # so computed/expression columns type correctly
-            probe = (f"SELECT * FROM ("
-                     f"{query.rstrip().rstrip(';')}) _pg_spark_probe "
-                     f"LIMIT 0")
-            from .types import spark_type_from_oid
-            with psycopg.connect(dsn) as con, con.cursor() as cur:
-                cur.execute(probe)
-                if not cur.description:
-                    raise ValueError(
-                        "postgres_scan query returned no result "
-                        "descriptor — not a SELECT?")
-                return T.StructType([
-                    T.StructField(
-                        col.name,
-                        spark_type_from_oid(col.type_code,
-                                            precision=col.precision,
-                                            scale=col.scale),
-                        True)
-                    for col in cur.description
-                ])
-        pg_schema = self.options.get("schema", "public")
-        with psycopg.connect(dsn) as con, con.cursor() as cur:
-            # information_schema probe — the reference reads the same
-            # catalog via PGQuery (postgres_scanner.cpp GetColumnInfo)
-            # attndims gives the DECLARED dimensionality so the probe
-            # types int[][] as array<array<int>> — decode_array emits
-            # nested lists for ndim>1 frames and the declared schema
-            # must match (reference: postgres_utils.cpp
-            # TypeToLogicalType walks the same catalog dims;
-            # attach_existing_multidimensional_array.test)
-            cur.execute(
-                "SELECT c.column_name, c.data_type, c.udt_name, "
-                "c.numeric_precision, c.numeric_scale, "
-                "COALESCE(a.attndims, 1) "
-                "FROM information_schema.columns c "
-                "JOIN pg_catalog.pg_class pc ON pc.relname = c.table_name "
-                "JOIN pg_catalog.pg_namespace pn "
-                "  ON pn.oid = pc.relnamespace "
-                " AND pn.nspname = c.table_schema "
-                "JOIN pg_catalog.pg_attribute a "
-                "  ON a.attrelid = pc.oid "
-                " AND a.attname = c.column_name "
-                "WHERE c.table_schema = %s AND c.table_name = %s "
-                "ORDER BY c.ordinal_position", (pg_schema, table))
-            fields = []
-            for name, dtyp, udt, prec, scale, ndims in cur.fetchall():
-                if dtyp == "ARRAY":
-                    dt = pg_type_to_spark(udt.lstrip("_"),
-                                          array_dims=max(ndims, 1))
-                else:
-                    dt = pg_type_to_spark(
-                        udt or dtyp, precision=prec, scale=scale)
-                self._pg_udts[name] = (udt or dtyp or "").lower()
-                fields.append(T.StructField(name, dt, True))
-        if not fields:
-            raise ValueError(
-                f"table {pg_schema}.{table} not found on remote server")
-        return T.StructType(fields)
+        schema, self._pg_udts = _source(self.options).describe(
+            self.options.get("table", ""), self.options.get("query", ""))
+        return schema
 
     def reader(self, schema: T.StructType) -> PostgresScanReader:
         import json

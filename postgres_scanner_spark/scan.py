@@ -15,6 +15,7 @@ replaces ctid ranges (parquet row groups are the moral equivalent).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -23,6 +24,15 @@ from pyspark.sql import DataFrame, SparkSession
 from .connection import ConnectionInfo, parse_dsn
 from .pushdown import render_select, transform_filters
 from .settings import SETTINGS
+
+_QUERY_LOG = logging.getLogger("postgres_scanner_spark.queries")
+
+
+def log_query(sql: str) -> None:
+    """pg_debug_show_queries: every generated remote query goes to
+    the `postgres_scanner_spark.queries` logger at INFO."""
+    if SETTINGS.pg_debug_show_queries:
+        _QUERY_LOG.info("%s", sql)
 
 
 @dataclass
@@ -138,13 +148,11 @@ def build_jdbc_options(
             cond = where[len("WHERE "):]
             predicates = [f"{p} AND ({cond})" for p in predicates]
         props["dbtable"] = f'"{schema}"."{table}"'
-        if SETTINGS.pg_debug_show_queries:
-            print(props["dbtable"], predicates[0])
+        log_query(f'{props["dbtable"]} {predicates[0]}')
         return info.jdbc_url, props, predicates
     inner = render_select(table, columns, filters, schema=schema)
     props["dbtable"] = f"({inner}) AS scan_subq"
-    if SETTINGS.pg_debug_show_queries:
-        print(inner)
+    log_query(inner)
     return info.jdbc_url, props, predicates
 
 
