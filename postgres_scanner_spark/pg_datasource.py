@@ -20,7 +20,7 @@ Parity with the reference's execution strategy:
   rendered into the remote WHERE via pushdown.py — the others are
   returned to Spark to evaluate (same contract as
   postgres_scan_pushdown).
-- read(): streams one task's rows from the source.
+- read(): streams one task's rows from the source as Arrow batches.
 
 Backends: the reference sends every scan, COPY and catalog probe
 through one connection type (src/postgres_connection.cpp
@@ -34,14 +34,17 @@ builds one per DSN:
 - `_PgSource` for libpq DSNs (`host=... dbname=...`), a real
   PostgreSQL server over psycopg when installed, else the vendored
   pure-Python wire client (pgclient.py): ctid page ranges, and tasks
-  yield the tuples BinaryCopyReader decodes from COPY binary.
+  yield the Arrow batches VectorBinaryCopyReader decodes from COPY
+  binary.
   Exercised end-to-end against a live server in tests/test_live_pg.py.
 A source opens connections (`exec` for a row list, `iter` to stream
 rows), describes a table or query as a Spark schema plus PG udts,
 renders the select list, table reference and per-task page
-predicate, yields a task's rows, and loads a writer's spools in one
-transaction. The batch reader, both stream readers and the writer
-call it and never check the scheme themselves.
+predicate, yields a task's rows as Arrow batches (both sources, so
+Spark's per-row converter is never on the batch read path), and
+loads a writer's spools in one transaction. The batch reader, both
+stream readers and the writer call it and never check the scheme
+themselves.
 """
 
 from __future__ import annotations
@@ -695,11 +698,13 @@ class _PgSource(_Source):
 
     def read(self, sql: str, fields, udts) -> Iterator:
         """Stream `COPY (sql) TO STDOUT (FORMAT binary)` and decode
-        the PGCOPY frames with pgwire — the same wire path as the
+        the PGCOPY frames column-wise — the same wire path as the
         reference (postgres_connection.cpp BeginCopyTo +
-        postgres_binary_reader.hpp). Yields plain tuples; Spark
-        converts per the declared schema."""
-        from .pgwire import BinaryCopyReader, ChunkStream, spark_field_oid
+        postgres_binary_reader.hpp). Yields Arrow batches of about
+        1 MiB of rows, typed exactly `to_arrow_schema(fields)`, so
+        Spark ingests them without a per-row conversion."""
+        from .pgwire import spark_field_oid
+        from .pgwire_vec import VectorBinaryCopyReader
         from .types import GEOMETRY_OIDS
         oids = [GEOMETRY_OIDS.get(udts.get(f.name),
                                   spark_field_oid(f.dataType))
@@ -708,10 +713,11 @@ class _PgSource(_Source):
             i for i, f in enumerate(fields)
             if isinstance(f.dataType, T.ArrayType)
             and udts.get(f.name) not in GEOMETRY_OIDS}
-        reader = BinaryCopyReader(oids, array_cols)
+        reader = VectorBinaryCopyReader(T.StructType(list(fields)), oids,
+                                        array_cols)
         with self.connect() as c, c.con.cursor() as cur, \
                 cur.copy(f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
-            yield from reader.read(ChunkStream(cp))
+            yield from reader.read(cp)
 
     def load(self, w: "PostgresScanWriter", messages) -> None:
         """Each spool replays as `COPY target FROM STDIN (FORMAT
@@ -884,7 +890,7 @@ class PostgresScanReader(DataSourceReader):
         log_query(sql)
         return sql
 
-    # -- execution: Arrow batches from duckdb, COPY-binary tuples from libpq
+    # -- execution: Arrow batches from either source
     def read(self, partition: _Task) -> Iterator:
         return self.src.read(partition.sql, self.schema_.fields,
                              self.pg_udts)

@@ -494,7 +494,7 @@ class _Proto:
 
     def __init__(self, sock: socket.socket):
         self.sock = sock
-        self._rbuf = b""
+        self._rbuf = bytearray()
         self.tx_status = "I"        # ReadyForQuery: I / T / E
         self.notices: list[dict] = []
 
@@ -506,7 +506,10 @@ class _Proto:
                 raise ConnectionClosed(
                     {"M": "server closed the connection"})
             self._rbuf += chunk
-        out, self._rbuf = self._rbuf[:n], self._rbuf[n:]
+        # consume in place: re-slicing the buffer would copy all of it
+        # twice per message (a COPY OUT sends one message per row)
+        out = bytes(self._rbuf[:n])
+        del self._rbuf[:n]
         return out
 
     def read_msg(self) -> tuple[str, bytes]:

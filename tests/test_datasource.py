@@ -244,8 +244,8 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
 def test_read_live_pg_with_mocked_psycopg(monkeypatch):
     """Drive the ACTUAL live-scan method end-to-end: a fake psycopg
     module whose cursor.copy() yields recorded PGCOPY chunks (split at
-    awkward boundaries) — verifies the COPY SQL issued, the
-    ChunkStream reassembly, and the full frame→tuple decode, i.e.
+    awkward boundaries) — verifies the COPY SQL issued, reassembly
+    across chunks, and the full frame→RecordBatch decode, i.e.
     everything except the TCP socket (reference:
     postgres_connection.cpp BeginCopyTo + postgres_binary_reader.hpp)."""
     import struct
@@ -265,7 +265,7 @@ def test_read_live_pg_with_mocked_psycopg(monkeypatch):
         + _field(struct.pack("!d", -2.25))
     )
     stream = _header() + rows + TRAILER
-    # ragged chunking exercises ChunkStream reassembly across frames
+    # ragged chunking exercises reassembly across frames
     chunks = [stream[i:i + 7] for i in range(0, len(stream), 7)]
     issued = []
 
@@ -304,7 +304,13 @@ def test_read_live_pg_with_mocked_psycopg(monkeypatch):
     ])
     r = PostgresScanReader(schema, {
         "dsn": "host=fake dbname=db", "table": "t"})
-    out = list(r._read_live_pg('SELECT "id", "name", "v" FROM "public"."t"'))
+    batches = list(r._read_live_pg(
+        'SELECT "id", "name", "v" FROM "public"."t"'))
+    # the read yields Arrow batches typed exactly as Spark's own
+    # schema conversion, so Spark ingests them without a per-row pass
+    from pyspark.sql.pandas.types import to_arrow_schema
+    assert all(b.schema == to_arrow_schema(schema) for b in batches)
+    out = [tuple(row.values()) for b in batches for row in b.to_pylist()]
     assert out == [(1, "alice", 1.5), (2, None, -2.25)]
     assert issued == ['COPY (SELECT "id", "name", "v" FROM "public"."t") '
                       'TO STDOUT (FORMAT binary)']

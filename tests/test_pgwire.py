@@ -519,3 +519,284 @@ def test_null_byte_policy_both_codecs():
     assert encode_array(pgt.TEXTOID, ["b\x00ad"],
                         null_byte_replacement="_") == \
         encode_array(pgt.TEXTOID, ["b_ad"])
+
+
+# ------------------------------------------------ vectorized decoder
+# VectorBinaryCopyReader must yield exactly the Arrow Spark built from
+# the contract reader's tuples: Spark's per-value converters, then
+# RecordBatch.from_arrays against to_arrow_schema.
+def _spark_arrow(schema, oids, stream, array_cols=None):
+    import pyarrow as pa
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = list(BinaryCopyReader(oids, array_cols).read(
+        io.BytesIO(stream)))
+    convs = [LocalDataToArrowConversion._create_converter(f.dataType)
+             for f in schema.fields]
+    cols = [[c(r[i]) for r in rows] for i, c in enumerate(convs)]
+    return pa.Table.from_batches([pa.RecordBatch.from_arrays(
+        cols, schema=to_arrow_schema(schema))])
+
+
+def _vector_arrow(schema, oids, chunks, array_cols=None):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from postgres_scanner_spark.pgwire_vec import VectorBinaryCopyReader
+
+    want = to_arrow_schema(schema)
+    batches = list(VectorBinaryCopyReader(schema, oids, array_cols)
+                   .read(iter(chunks)))
+    assert all(b.schema == want for b in batches)
+    return pa.Table.from_batches(batches, schema=want)
+
+
+def _rows_stream(oids, rows, array_elem=None) -> bytes:
+    """PGCOPY bytes for `rows`; a cell given as `bytes` inside a
+    1-tuple ships as that raw payload (sentinels, bad lengths)."""
+    out = [_header()]
+    for r in rows:
+        out.append(struct.pack("!h", len(r)))
+        for i, v in enumerate(r):
+            if isinstance(v, tuple):
+                out.append(_field(v[0]))
+            elif v is None:
+                out.append(_field(None))
+            elif array_elem and i in array_elem:
+                out.append(_field(encode_array(array_elem[i], v)))
+            else:
+                out.append(_field(encode_field(oids[i], v)))
+    out.append(TRAILER)
+    return b"".join(out)
+
+
+def _chunked(data: bytes, n: int) -> list[bytes]:
+    return [data[i:i + n] for i in range(0, len(data), n)]
+
+
+def _fast_schema():
+    from pyspark.sql import types as T
+    return T.StructType([T.StructField(n, t) for n, t in [
+        ("b", T.BooleanType()), ("i1", T.ByteType()),
+        ("i2", T.ShortType()), ("i4", T.IntegerType()),
+        ("i8", T.LongType()), ("f4", T.FloatType()),
+        ("f8", T.DoubleType()), ("s", T.StringType()),
+        ("by", T.BinaryType()), ("d", T.DateType()),
+        ("ts", T.TimestampNTZType()), ("tz", T.TimestampType())]])
+
+
+_UTC = timezone.utc
+_FAST_ROWS = [
+    (True, 7, -300, 2**31 - 1, -2**63, 1.5, -0.0, "héllo ✓ 日本",
+     b"\x00\xff", date(2024, 2, 29), datetime(2024, 1, 2, 3, 4, 5, 6),
+     datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=_UTC)),
+    (False, -128, 32767, -2**31, 2**63 - 1, float("inf"),
+     float("-inf"), "", b"", date(1, 1, 1), datetime(9999, 12, 31),
+     datetime(2000, 1, 1, tzinfo=_UTC)),
+]
+
+
+def test_vector_reader_fast_types_nulls_and_infinity():
+    """Every fast-path type, a NULL in each column on its own row,
+    an all-NULL row, empty and multibyte strings, and PG's ±infinity
+    date/timestamp sentinels (decoded to date.max/min and
+    datetime.max/min, as the scalar reader does)."""
+    from postgres_scanner_spark.pgwire import spark_field_oid
+
+    schema = _fast_schema()
+    oids = [spark_field_oid(f.dataType) for f in schema.fields]
+    rows = list(_FAST_ROWS) + [(None,) * 12]
+    for i in range(12):                   # one NULL per column
+        r = list(_FAST_ROWS[i % 2])
+        r[i] = None
+        rows.append(tuple(r))
+    inf_d, ninf_d = struct.pack("!i", 0x7FFFFFFF), struct.pack("!i", -2**31)
+    inf_t = struct.pack("!q", 2**63 - 1)
+    ninf_t = struct.pack("!q", -2**63)
+    rows.append(_FAST_ROWS[0][:9] + ((inf_d,), (inf_t,), (ninf_t,)))
+    rows.append(_FAST_ROWS[1][:9] + ((ninf_d,), (ninf_t,), (inf_t,)))
+    # last: NULLs in a run of fixed-width columns right before the
+    # trailer, where the all-present layout would overrun the stream
+    rows.append(_FAST_ROWS[0][:9] + (None,) * 3)
+    stream = _rows_stream(oids, rows)
+    want = _spark_arrow(schema, oids, stream)
+    got = _vector_arrow(schema, oids, [stream])
+    assert got.equals(want)
+    assert got.num_rows == len(rows)
+    assert got.column("d").to_pylist()[-3:-1] == [date.max, date.min]
+    assert got.column("ts").to_pylist()[-3:-1] == [datetime.max,
+                                                   datetime.min]
+
+
+def test_vector_reader_invalid_utf8_raises():
+    from pyspark.sql import types as T
+    schema = T.StructType([T.StructField("s", T.StringType())])
+    stream = _rows_stream([pgt.TEXTOID], [("ok",), ((b"\xff\xfe",),)])
+    with pytest.raises(ValueError):
+        _spark_arrow(schema, [pgt.TEXTOID], stream)
+    with pytest.raises(ValueError):
+        _vector_arrow(schema, [pgt.TEXTOID], [stream])
+
+
+def test_vector_reader_fallback_columns():
+    """numeric, int[], point and a bool sent with a 2-byte payload
+    take the per-column scalar path, beside fast columns, with the
+    same Arrow as before."""
+    from pyspark.sql import types as T
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("n", T.DecimalType(12, 3)),
+        T.StructField("ia", T.ArrayType(T.IntegerType())),
+        T.StructField("p", T.StructType([
+            T.StructField("x", T.DoubleType()),
+            T.StructField("y", T.DoubleType())])),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("s", T.StringType()),
+    ])
+    oids = [pgt.INT8OID, pgt.NUMERICOID, pgt.INT4OID, pgt.POINTOID,
+            pgt.BOOLOID, pgt.TEXTOID]
+    pt = struct.pack("!dd", 1.5, -2.0)
+    rows = [
+        (1, Decimal("123456789.123"), [1, None, 3], (pt,), True, "a"),
+        (2, None, None, None, None, None),
+        (3, Decimal("-0.001"), [], (pt,), (b"\x00\x00",), "c"),
+    ]
+    stream = _rows_stream(oids, rows, array_elem={2: pgt.INT4OID})
+    want = _spark_arrow(schema, oids, stream, {2})
+    got = _vector_arrow(schema, oids, _chunked(stream, 7), {2})
+    assert got.equals(want)
+    # any 2-byte payload is true to the scalar decoder
+    assert got.column("b").to_pylist() == [True, None, True]
+
+
+def test_vector_reader_fixed_width_mismatch_and_range_raise():
+    """A fixed-width column whose payload length or value the fast
+    path cannot hold goes to the scalar path — which raises there,
+    exactly as before."""
+    from pyspark.sql import types as T
+    schema = T.StructType([T.StructField("i", T.IntegerType())])
+    stream = _rows_stream([pgt.INT4OID], [(1,), ((b"\x00\x01",),)])
+    with pytest.raises(struct.error):
+        _spark_arrow(schema, [pgt.INT4OID], stream)
+    with pytest.raises(struct.error):
+        _vector_arrow(schema, [pgt.INT4OID], [stream])
+    # day 3,000,000 after 2000-01-01 is past date.max
+    schema = T.StructType([T.StructField("d", T.DateType())])
+    stream = _rows_stream([pgt.DATEOID],
+                          [((struct.pack("!i", 3_000_000),),)])
+    with pytest.raises(ValueError):
+        _spark_arrow(schema, [pgt.DATEOID], stream)
+    with pytest.raises(ValueError):
+        _vector_arrow(schema, [pgt.DATEOID], [stream])
+
+
+@pytest.mark.parametrize("chunk,block", [(7, 1 << 20), (7, 50), (1, 13),
+                                         (1000, 64)])
+def test_vector_reader_ragged_chunks_and_block_splits(chunk, block):
+    """Ragged chunks and blocks small enough that rows straddle block
+    boundaries: same table, several batches."""
+    from unittest import mock
+
+    from postgres_scanner_spark import pgwire_vec
+    from postgres_scanner_spark.pgwire import spark_field_oid
+
+    schema = _fast_schema()
+    oids = [spark_field_oid(f.dataType) for f in schema.fields]
+    rows = [_FAST_ROWS[i % 2] for i in range(40)]
+    stream = _rows_stream(oids, rows)
+    want = _spark_arrow(schema, oids, stream)
+    with mock.patch.object(pgwire_vec, "BLOCK_BYTES", block):
+        got = _vector_arrow(schema, oids, _chunked(stream, chunk))
+    assert got.equals(want)
+    if block < 100:
+        assert got.column(0).num_chunks > 1
+
+
+def test_vector_reader_framing():
+    """Header extension skipped; zero-row stream yields no batch;
+    bad signature, short header, wrong field count, a row cut short
+    and a missing trailer each raise the contract reader's error."""
+    from pyspark.sql import types as T
+    schema = T.StructType([T.StructField("a", T.IntegerType()),
+                           T.StructField("s", T.StringType())])
+    oids = [pgt.INT4OID, pgt.TEXTOID]
+    row = _rows_stream(oids, [(5, "x")])[len(_header()):-2]
+    ext = _header(ext=b"\x01\x02\x03") + row + TRAILER
+    assert _vector_arrow(schema, oids, _chunked(ext, 5)).equals(
+        _spark_arrow(schema, oids, ext))
+    empty = _vector_arrow(schema, oids, [_header() + TRAILER])
+    assert empty.num_rows == 0 and empty.column(0).num_chunks == 0
+    bad = [
+        ("bad signature",
+         b"PGCOPY\n\xff\r\n\x01" + _header()[11:] + TRAILER),
+        ("truncated", _header()[:15]),                     # short header
+        ("truncated", _header(ext=b"\x01\x02\x03")[:-1]),  # short ext
+        ("fields, expected 2", _header() + struct.pack("!h", 3) + row[2:]),
+        ("truncated", _header() + row[:-1]),               # row cut short
+        ("truncated", _header() + row),                    # no trailer
+    ]
+    for msg, stream in bad:
+        with pytest.raises(ValueError, match=msg):
+            list(BinaryCopyReader(oids).read(io.BytesIO(stream)))
+        with pytest.raises(ValueError, match=msg):
+            _vector_arrow(schema, oids, _chunked(stream, 3))
+
+
+def _fuzz_columns():
+    from pyspark.sql import types as T
+    ts = st.datetimes(min_value=datetime(1, 1, 1),
+                      max_value=datetime(9999, 12, 31))
+    return [
+        (T.BooleanType(), pgt.BOOLOID, st.booleans()),
+        (T.ShortType(), pgt.INT2OID, st.integers(-2**15, 2**15 - 1)),
+        (T.IntegerType(), pgt.INT4OID, st.integers(-2**31, 2**31 - 1)),
+        (T.LongType(), pgt.INT8OID, st.integers(-2**63, 2**63 - 1)),
+        (T.FloatType(), pgt.FLOAT4OID,
+         st.floats(allow_nan=False, width=32)),
+        (T.DoubleType(), pgt.FLOAT8OID, st.floats(allow_nan=False)),
+        (T.StringType(), pgt.TEXTOID,
+         st.text(max_size=12).filter(lambda s: "\x00" not in s)),
+        (T.BinaryType(), pgt.BYTEAOID, st.binary(max_size=12)),
+        (T.DateType(), pgt.DATEOID,
+         st.dates(min_value=date(1, 1, 1), max_value=date(9999, 12, 31))),
+        (T.TimestampNTZType(), pgt.TIMESTAMPOID, ts),
+        (T.TimestampType(), pgt.TIMESTAMPTZOID,
+         ts.map(lambda v: v.replace(tzinfo=_UTC))),
+        (T.DecimalType(10, 2), pgt.NUMERICOID,
+         st.decimals(allow_nan=False, allow_infinity=False, places=2,
+                     min_value=-10**7, max_value=10**7)),
+    ]
+
+
+@st.composite
+def _fuzz_case(draw):
+    spec = draw(st.lists(st.sampled_from(_fuzz_columns()), min_size=1,
+                         max_size=6))
+    rows = draw(st.lists(st.tuples(*[
+        st.one_of(st.none(), s[2]) for s in spec]), max_size=25))
+    return spec, rows
+
+
+@settings(max_examples=60, deadline=None)
+@given(case=_fuzz_case(), chunk=st.integers(1, 40),
+       block=st.sampled_from([16, 100, 1 << 20]))
+def test_vector_reader_property(case, chunk, block):
+    """Any column-type mix, NULL pattern, chunking and block size:
+    the vector reader's table equals Spark's conversion of the
+    contract reader's tuples."""
+    from unittest import mock
+
+    from pyspark.sql import types as T
+
+    from postgres_scanner_spark import pgwire_vec
+
+    spec, rows = case
+    schema = T.StructType([T.StructField(f"c{i}", s[0])
+                           for i, s in enumerate(spec)])
+    oids = [s[1] for s in spec]
+    stream = _rows_stream(oids, rows)
+    want = _spark_arrow(schema, oids, stream)
+    with mock.patch.object(pgwire_vec, "BLOCK_BYTES", block):
+        got = _vector_arrow(schema, oids, _chunked(stream, chunk))
+    assert got.equals(want)
